@@ -20,7 +20,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from binance_futures_availability_spark import oracles
-from binance_futures_availability_spark.catalog import load_table, load_table_hot
+from binance_futures_availability_spark.catalog import (
+    dir_fingerprint,
+    load_table,
+    load_table_hot,
+    open_table,
+    table_path,
+)
 from binance_futures_availability_spark.functions import (
     CONTRACT_SUFFIX_RE,
     classify_symbol,
@@ -138,6 +144,18 @@ def _da(spark: SparkSession, sf_dir: str) -> DataFrame:
     return availability_fact(spark, sf_dir)
 
 
+def _sf_key(sf_dir: str) -> str:
+    """Name for an sf_dir's composed-gate artifacts: resolved path plus
+    the lineitem fingerprint, so in-place testdata regeneration rebuilds."""
+    import hashlib
+    import os
+
+    return "{}-{}".format(
+        hashlib.md5(os.path.realpath(sf_dir).encode()).hexdigest()[:8],
+        str(dir_fingerprint(table_path(sf_dir, "lineitem")))[:8],
+    )
+
+
 #: process-private scratch root for gate-composed artifacts (lazy)
 _GATE_SCRATCH: list = []
 
@@ -175,20 +193,12 @@ def _duckdb_import_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     once per PROCESS under a session-scoped scratch dir
     (``_session_cache_root``) so warm reps measure the query; every fresh
     process re-pays the full export→import rebuild (cold-pass cost)."""
-    import hashlib
     import os
 
-    from binance_futures_availability_spark.operators.availability import (
-        _source_fingerprint,
-    )
     from binance_futures_availability_spark.sources import duckdb_io
 
-    cache_root = _session_cache_root()
-    key = "{}-{}".format(
-        hashlib.md5(os.path.realpath(sf_dir).encode()).hexdigest()[:8],
-        _source_fingerprint(sf_dir),
-    )
-    root = os.path.join(cache_root, "duckdb_io")
+    key = _sf_key(sf_dir)
+    root = os.path.join(_session_cache_root(), "duckdb_io")
     os.makedirs(root, exist_ok=True)
     dest = os.path.join(root, f"{key}_fact")
     if not os.path.exists(os.path.join(dest, "_SUCCESS")):
@@ -254,9 +264,6 @@ def _gate_head(url: str, timeout: float) -> tuple[int, dict]:
 
 #: daily_update artifacts already verified this process (skip marker stat)
 _UPDATE_READY: set = set()
-#: cached window-row handles per committed fact path (the _FACT_HANDLES
-#: discipline: repeat reads must not re-pay partition discovery)
-_UPDATE_HANDLES: dict = {}
 
 
 def _daily_update(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -272,20 +279,12 @@ def _daily_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     dir (``_session_cache_root``): warm reps measure the query; every
     fresh process re-pays the full pipeline rebuild (cold-pass cost)."""
     import datetime as dt
-    import hashlib
     import os
 
     from binance_futures_availability_spark import update as update_mod
-    from binance_futures_availability_spark.operators.availability import (
-        _source_fingerprint,
-    )
 
-    cache_root = _session_cache_root()
-    key = "{}-{}".format(
-        hashlib.md5(os.path.realpath(sf_dir).encode()).hexdigest()[:8],
-        _source_fingerprint(sf_dir),
-    )
-    root = os.path.join(cache_root, "daily_update")
+    key = _sf_key(sf_dir)
+    root = os.path.join(_session_cache_root(), "daily_update")
     os.makedirs(root, exist_ok=True)
     fact = os.path.join(root, f"{key}_fact")
     marker = os.path.join(root, f"{key}_done")
@@ -330,29 +329,23 @@ def _daily_update(spark: SparkSession, sf_dir: str) -> DataFrame:
                 with open(marker, "w", encoding="utf-8") as f:
                     f.write("ok")
         _UPDATE_READY.add(fact)
-    out = _UPDATE_HANDLES.get(fact)
-    if out is None:
-        start, end = update_mod.lookback_window(
-            dt.date.fromisoformat(UPDATE_TODAY), UPDATE_LOOKBACK
+    start, end = _UPDATE_WINDOW
+    # registered handle: repeat reads must not re-pay partition discovery
+    out = open_table(
+        spark,
+        fact,
+        "daily_update_window",
+        lambda df: df.filter(F.col("date").between(F.lit(start), F.lit(end)))
+        .select(
+            F.col("date").cast("date").alias("date"),
+            "symbol",
+            "available",
+            "file_size_bytes",
+            "status_code",
+            "url",
         )
-        out = (
-            spark.read.parquet(fact)
-            .filter(
-                F.col("date").between(
-                    F.lit(start.isoformat()), F.lit(end.isoformat())
-                )
-            )
-            .select(
-                F.col("date").cast("date").alias("date"),
-                "symbol",
-                "available",
-                "file_size_bytes",
-                "status_code",
-                "url",
-            )
-            .cache()
-        )
-        _UPDATE_HANDLES[fact] = out
+        .cache(),
+    )
     return gathered_sort(out, "date", "symbol")
 
 

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
 
+from .catalog import open_table
 from .functions import gathered_sort
 from .operators import analytics, availability, snapshots, timelines, volume
 from .session import get_session
@@ -49,9 +50,11 @@ def parse_iso_date(d: dt.date | str | None) -> dt.date | None:
 class Engine:
     """SparkSession plus the fact-table source.
 
-    ``table_path`` points at a parquet daily_availability table; for the
-    synthetic testdata layout pass ``sf_dir`` instead and the table is the
-    materialized derivation (operators/availability.availability_fact).
+    ``table_path`` points at a parquet daily_availability table, opened
+    through the catalog's handle registry (one partition discovery per
+    table version per session); for the synthetic testdata layout pass
+    ``sf_dir`` instead and the table is the materialized derivation
+    (operators/availability.availability_fact).
     """
 
     TABLE_NAME = "daily_availability"
@@ -73,7 +76,7 @@ class Engine:
 
     def table(self) -> DataFrame:
         if self._table_path is not None:
-            return self.spark.read.parquet(self._table_path)
+            return open_table(self.spark, self._table_path)
         return availability.availability_fact(self.spark, self._sf_dir)
 
     # -------------------------------------- A8 routing: matview analytics

@@ -7,7 +7,7 @@ the derived corpus artifacts the dedup/similarity/text operators share
 (shingle arrays, MinHash signatures, SimHash fingerprints, quantized
 embeddings): the first query over a source table pays the derivation and
 ``.persist()``-es it; every later query reuses the in-memory columnar form.
-The fact-table twin of this idea is ``operators.availability._FACT_HANDLES``.
+The stored-table twin of this idea is ``catalog.open_table``'s registry.
 
 Keys capture BOTH the source files and the md5 of the canonicalized logical
 plan, so ``docs`` vs ``docs.filter(...)`` — same files, different plan —
@@ -134,19 +134,17 @@ def _evict_over_budget(spark, keep_key) -> int:
 
 
 def is_file_backed(df: DataFrame) -> bool:
-    """True when ``df`` reads identifiable files (directly or through a
-    hot-pinned catalog handle's ``_spark_graft_source``) — i.e. when
-    ``plan_key`` would return a real key and derived artifacts may cache.
-    Use this for BRANCHING on cacheability (advisor r14): probing with
-    ``plan_key(df, "<some-tag>")`` works only because the result is
-    discarded, pays a JVM plan-canonicalization round-trip for nothing,
-    and misleads readers into thinking the probe tag is the cache key."""
-    try:
-        if df.inputFiles():
-            return True
-    except Exception:  # noqa: BLE001 — streaming/exotic plans
-        return False
-    return getattr(df, "_spark_graft_source", None) is not None
+    """True exactly when ``plan_key`` returns a real key for ``df`` — i.e.
+    when derived artifacts may cache. Use this for BRANCHING on
+    cacheability instead of probing with ``plan_key(df, "<some-tag>")``,
+    which misleads readers into thinking the probe tag is the cache key."""
+    return plan_key(df) is not None
+
+
+def _plan_digest(df: DataFrame) -> str:
+    """md5 of ``df``'s canonicalized analyzed plan (one JVM round-trip)."""
+    plan = df._jdf.queryExecution().analyzed().canonicalized().toString()
+    return hashlib.md5(plan.encode()).hexdigest()
 
 
 def plan_key(df: DataFrame, *extra):
@@ -158,28 +156,26 @@ def plan_key(df: DataFrame, *extra):
     InMemoryRelation (the optimized plan has no file scan), so the key
     degenerates to None and silently disables caching. Operators that
     build an index over another index thread the source-frame key down
-    (see dedup._pair_jaccard's ``postings_key``). Hot-pinned catalog
-    tables (``catalog.load_table_hot``) carry their source identity in
-    ``_spark_graft_source`` — (path, fingerprint) — which substitutes
-    for the empty file list, so derived artifacts over hot tables cache
-    too (the fingerprint keys staleness exactly like the hot cache)."""
+    (see dedup._pair_jaccard's ``postings_key``). Handles from the
+    catalog registry (``catalog.open_table``: hot-pinned tables, the
+    cached fact table) carry their source identity in
+    ``_spark_graft_source`` — (realpath, directory fingerprint) — which
+    substitutes for the empty file list, so derived artifacts over them
+    cache too (the fingerprint keys staleness exactly like the registry)."""
     try:
         files = tuple(sorted(df.inputFiles()))
         if not files:
             src = getattr(df, "_spark_graft_source", None)
             if src is None:
                 return None
-            # md5 of the fingerprint, not str(tuple): the raw tuple
-            # embeds file NAMES, and a name containing '#' would corrupt
-            # sweep_dead_entries' rpartition('#') split (the artifact
-            # would evict+rebuild on every miss insert). The hash also
-            # keeps keys small for large directories.
-            fp_hash = hashlib.md5(str(src[1]).encode()).hexdigest()
-            files = (f"hot:{src[0]}#{fp_hash}",)
-        plan = df._jdf.queryExecution().analyzed().canonicalized().toString()
+            # the fingerprint is a hex digest: no '#' can corrupt
+            # sweep_dead_entries' rpartition('#') split, whatever the
+            # table's file names contain
+            files = (f"hot:{src[0]}#{src[1]}",)
+        digest = _plan_digest(df)
     except Exception:  # noqa: BLE001 — streaming/exotic plans: just don't cache
         return None
-    return (files, hashlib.md5(plan.encode()).hexdigest(), *extra)
+    return (files, digest, *extra)
 
 
 def multi_plan_key(dfs, *extra):
@@ -221,12 +217,9 @@ def sweep_dead_entries(cache: dict) -> int:
     Returns the number of entries evicted. O(live entries) per call; runs
     only on cache MISS inserts, so steady-state hits pay nothing.
 
-    ``hot:PATH#md5(FP)`` pseudo-URIs (artifacts derived from hot-pinned
-    catalog tables) are dead when the md5 of the directory's CURRENT
-    fingerprint no longer matches — same staleness rule the hot cache
-    itself uses. FP is hashed at key construction (plan_key) because the
-    raw fingerprint embeds file names, which may themselves contain
-    '#' and would corrupt this rpartition split."""
+    ``hot:PATH#FP`` pseudo-URIs (artifacts derived from registered
+    catalog handles) are dead when the directory's CURRENT fingerprint no
+    longer matches — the staleness rule of the catalog registry itself."""
     import os
 
     dead = []
@@ -239,10 +232,7 @@ def sweep_dead_entries(cache: dict) -> int:
                 from . import catalog
 
                 path, _, fp = uri[4:].rpartition("#")
-                cur = hashlib.md5(
-                    str(catalog._dir_fingerprint(path)).encode()
-                ).hexdigest()
-                if cur != fp:
+                if catalog.dir_fingerprint(path) != fp:
                     dead.append(key)
                     break
                 continue

@@ -36,7 +36,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import dir_fingerprint, load_table, open_table, table_path
 
 #: bump when the derivation changes — invalidates materialized caches
 DA_VERSION = "v4"
@@ -138,44 +138,19 @@ def materialize_fact(
         ).write.mode("overwrite").parquet(path)
 
 
-#: session-lifetime handles to the materialized table, keyed by parquet path —
-#: ``.cache()``d so repeated catalog reads within one session scan the
-#: in-memory columnar form (the analogue of DuckDB's buffer pool).
-_FACT_HANDLES: dict[str, DataFrame] = {}
-
-
-def _source_fingerprint(sf_dir: str) -> str:
-    """Digest of the derivation input's file identities (relative name,
-    size, mtime_ns) for every file under ``lineitem.parquet``.
-
-    Folding this into the cache key means regenerating the testdata in
-    place yields a NEW cache entry instead of silently serving stale rows
-    (the _SUCCESS marker and the in-memory .cache() handle both survive an
-    in-place rewrite and would otherwise mask it)."""
-    src = os.path.join(os.path.realpath(sf_dir), "lineitem.parquet")
-    entries: list[str] = []
-    if os.path.isdir(src):
-        for root, _dirs, files in os.walk(src):
-            for name in sorted(files):
-                st = os.stat(os.path.join(root, name))
-                rel = os.path.relpath(os.path.join(root, name), src)
-                entries.append(f"{rel}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(src):
-        st = os.stat(src)
-        entries.append(f".:{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.md5("\n".join(entries).encode()).hexdigest()[:8]
-
-
 def availability_fact(
     spark: SparkSession, sf_dir: str, cache_root: str | None = None
 ) -> DataFrame:
     """Materialized ``daily_availability`` for a testdata dir.
 
-    Derives from lineitem exactly once per (sf_dir, source fingerprint,
+    Derives from lineitem exactly once per (sf_dir, lineitem fingerprint,
     DA_VERSION), stores it under ``cache_root``, and thereafter returns a
     catalog read — so an 18-query session performs ONE derivation
     aggregation instead of 18 full re-aggregations of the fact source (the
-    round-1 scale-killer).
+    round-1 scale-killer). The ``.cache()``d handle is registered in the
+    catalog as a derivation of lineitem, so regenerating the testdata in
+    place yields a NEW materialization and unpersists the stale handle
+    (the _SUCCESS marker and the in-memory handle would otherwise mask it).
 
     Concurrency: materialization is staged into a process-private temp dir
     and committed with an atomic rename, so two processes racing on a cold
@@ -185,64 +160,37 @@ def availability_fact(
     cache_root = cache_root or os.environ.get(
         "SPARK_GRAFT_CACHE", "/root/repo/.cache"
     )
-    # key on the FULL resolved path (basename alone would silently share a
-    # cache between /a/sf0.1 and /b/sf0.1) plus the input fingerprint
-    # (detects in-place regeneration); basename kept for readability
-    real = os.path.realpath(sf_dir)
-    sf_name = os.path.basename(real) or "default"
-    digest = hashlib.md5(real.encode()).hexdigest()[:8]
-    fp = _source_fingerprint(sf_dir)
-    path = os.path.join(
-        cache_root, f"da_{DA_VERSION}", f"{sf_name}-{digest}-{fp}"
-    )
-    handle = _FACT_HANDLES.get(path)
-    if handle is not None:
-        return handle
-    # a new fingerprint supersedes any older materialization of the same
-    # sf_dir — unpersist the stale handle (and its clustered projections)
-    # so a session that regenerates testdata doesn't strand cached blocks
-    stale_prefix = f"{sf_name}-{digest}-"
-    for old_path in [
-        p
-        for p in _FACT_HANDLES
-        if os.path.basename(p).startswith(stale_prefix) and p != path
-    ]:
-        try:
-            _FACT_HANDLES.pop(old_path).unpersist()
-        except Exception:  # noqa: BLE001 — eviction is best-effort
-            pass
-    for old_key in [
-        k for k in _CLUSTERED_HANDLES if k[0][0] == real and k[0][1] != fp
-    ]:
-        try:
-            _CLUSTERED_HANDLES.pop(old_key).unpersist()
-        except Exception:  # noqa: BLE001
-            pass
-    marker = os.path.join(path, "_SUCCESS")
-    if not os.path.exists(marker):
-        staging = f"{path}.tmp-{os.getpid()}"
-        materialize_fact(availability_from_lineitem(spark, sf_dir), staging)
-        try:
-            os.rename(staging, path)
-        except OSError:
-            # lost the race — another process committed first; its content
-            # is byte-equivalent (same deterministic derivation), use it
-            import shutil
+    source = table_path(sf_dir, "lineitem")
 
-            shutil.rmtree(staging, ignore_errors=True)
-    handle = spark.read.parquet(path).cache()
-    # carry the source identity the way catalog.load_table_hot does
-    # (catalog.py:135): inputFiles() can come back empty through the
-    # cached handle, and without this attribute plan_key(da, ...) returns
-    # None and SILENTLY disables every index artifact derived from the
-    # fact (index_cache.py:150 — the documented pitfall)
-    handle._spark_graft_source = (path, fp)
-    _FACT_HANDLES[path] = handle
-    return handle
+    def materialized(_lineitem: DataFrame) -> DataFrame:
+        # key on the FULL resolved path (basename alone would silently
+        # share a cache between /a/sf0.1 and /b/sf0.1) plus the input
+        # fingerprint; basename kept for readability
+        real = os.path.realpath(sf_dir)
+        path = os.path.join(
+            cache_root,
+            f"da_{DA_VERSION}",
+            "{}-{}-{}".format(
+                os.path.basename(real) or "default",
+                hashlib.md5(real.encode()).hexdigest()[:8],
+                str(dir_fingerprint(source))[:8],
+            ),
+        )
+        if not os.path.exists(os.path.join(path, "_SUCCESS")):
+            staging = f"{path}.tmp-{os.getpid()}"
+            materialize_fact(availability_from_lineitem(spark, sf_dir), staging)
+            try:
+                os.rename(staging, path)
+            except OSError:
+                # lost the race — another process committed first; its
+                # content is byte-equivalent (same deterministic
+                # derivation), use it
+                import shutil
 
+                shutil.rmtree(staging, ignore_errors=True)
+        return spark.read.parquet(path).cache()
 
-#: symbol-clustered projections of the fact table, keyed by (sf_dir, cols).
-_CLUSTERED_HANDLES: dict = {}
+    return open_table(spark, source, ("fact", cache_root), materialized)
 
 
 def availability_fact_by_symbol(
@@ -261,25 +209,20 @@ def availability_fact_by_symbol(
     This is the in-memory analogue of ``writer.write_bucketed``'s
     idx_symbol_date layout — on a cluster, the bucketed table gives the
     same property across sessions. One narrow-projection copy per column
-    set; built lazily on first use and shared for the session.
+    set; built lazily on first use and shared for the session, registered
+    like ``availability_fact`` so a lineitem rewrite evicts it too.
     """
-    # fingerprint in the key: without it an in-place testdata rewrite
-    # would keep serving the STALE clustered projection (availability_fact
-    # detects the rewrite, but this key wouldn't) — superseded entries are
-    # evicted by availability_fact when the new fingerprint first misses
-    key = ((os.path.realpath(sf_dir), _source_fingerprint(sf_dir)), tuple(cols))
-    handle = _CLUSTERED_HANDLES.get(key)
-    if handle is None:
-        n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-        handle = (
-            availability_fact(spark, sf_dir)
-            .select(*cols)
-            .repartition(n, "symbol")
-            .sortWithinPartitions("symbol", "date")
-            .cache()
-        )
-        _CLUSTERED_HANDLES[key] = handle
-    return handle
+    n = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    return open_table(
+        spark,
+        table_path(sf_dir, "lineitem"),
+        ("fact_by_symbol", tuple(cols), n),
+        lambda _lineitem: availability_fact(spark, sf_dir)
+        .select(*cols)
+        .repartition(n, "symbol")
+        .sortWithinPartitions("symbol", "date")
+        .cache(),
+    )
 
 
 #: DuckDB CTE equivalent of :func:`availability_from_lineitem` — prepend to

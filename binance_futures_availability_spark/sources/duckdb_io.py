@@ -35,6 +35,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import open_table
 from ..schema import DAILY_AVAILABILITY
 
 #: SQL identifiers interpolated into DuckDB statements (CREATE/COPY/INSERT
@@ -81,66 +82,27 @@ def _connect(db_path: str, read_only: bool = False):
     return duckdb.connect(db_path, read_only=read_only)
 
 
-#: session-lifetime handles to imported fact tables — the same buffer-pool
-#: analogue as operators.availability._FACT_HANDLES. Without it every
-#: catalog read re-runs parquet partition discovery over the ~2.5k date
-#: directories (~4 s/call at bench scale, the r7 judge's worst ratio);
-#: with it repeat reads serve from the cached columnar form. Keyed like
-#: catalog._TABLE_CACHE on (applicationId, resolved path, top-level dir
-#: fingerprint): an in-place rewrite (upsert touches a date dir's mtime)
-#: or a restarted session misses instead of serving a stale/dead handle.
-#: ``import_duckdb`` additionally invalidates eagerly on re-import so the
-#: superseded cache blocks are released, not just orphaned.
-_IMPORT_HANDLES: dict = {}
-
-
-def _handle_key(spark: SparkSession, path: str):
-    from ..catalog import _dir_fingerprint
-
-    real = os.path.realpath(path)
-    fp = _dir_fingerprint(real)
-    if fp is None:  # unreadable/remote: never memoize
-        return None
-    return (spark.sparkContext.applicationId, real, fp)
-
-
-def _invalidate_handle(path: str) -> None:
-    real = os.path.realpath(path)
-    for key in [k for k in _IMPORT_HANDLES if k[1] == real]:
-        stale = _IMPORT_HANDLES.pop(key)
-        try:
-            stale.unpersist()
-        except Exception:  # noqa: BLE001 — context may already be stopped
-            pass
+def _cast_fact(df: DataFrame) -> DataFrame:
+    """Declared column order and types (a partitioned read appends the
+    partition column last and may re-infer its type)."""
+    return df.select(
+        *[
+            F.col(f.name).cast(f.dataType).alias(f.name)
+            for f in DAILY_AVAILABILITY.fields
+        ]
+    )
 
 
 def read_fact(spark: SparkSession, path: str) -> DataFrame:
     """Catalog read of an imported fact table in declared column order and
-    types (a partitioned read appends the partition column last and may
-    re-infer its type). Memoized per (session, resolved path, directory
-    fingerprint) — an in-place rewrite changes the fingerprint and misses
-    naturally; ``import_duckdb`` also invalidates eagerly on re-import."""
-    key = _handle_key(spark, path)
-    handle = _IMPORT_HANDLES.get(key) if key is not None else None
-    if handle is None:
-        if key is not None:
-            # a fingerprint MISS for a path we've seen means the files
-            # were rewritten underneath us — unpersist the superseded
-            # snapshot instead of stranding its blocks for the session
-            _invalidate_handle(path)
-        handle = (
-            spark.read.parquet(path)
-            .select(
-                *[
-                    F.col(f.name).cast(f.dataType).alias(f.name)
-                    for f in DAILY_AVAILABILITY.fields
-                ]
-            )
-            .cache()
-        )
-        if key is not None:
-            _IMPORT_HANDLES[key] = handle
-    return handle
+    types, ``.cache()``d — the buffer-pool analogue: repeat reads serve
+    from the cached columnar form instead of re-running parquet partition
+    discovery (~4 s/call over ~2.5k date directories). Registered in
+    ``catalog.open_table``, so a re-import or any in-place rewrite misses
+    and unpersists the superseded snapshot."""
+    return open_table(
+        spark, path, "fact_cast", lambda df: _cast_fact(df).cache()
+    )
 
 
 def import_duckdb(
@@ -203,13 +165,7 @@ def import_duckdb(
         )
     finally:
         con.close()
-    raw = spark.read.parquet(staged)
-    cast = raw.select(
-        *[
-            F.col(f.name).cast(f.dataType).alias(f.name)
-            for f in DAILY_AVAILABILITY.fields
-        ]
-    )
+    cast = _cast_fact(spark.read.parquet(staged))
     if dest_path is None:
         atexit.register(shutil.rmtree, staging, ignore_errors=True)
         return cast
@@ -219,7 +175,6 @@ def import_duckdb(
         materialize_fact(cast, dest_path, partition_col=partition_col)
     finally:
         shutil.rmtree(staging, ignore_errors=True)
-    _invalidate_handle(dest_path)
     return read_fact(spark, dest_path)
 
 

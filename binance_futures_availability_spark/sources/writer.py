@@ -148,43 +148,72 @@ def upsert_partitioned(
     the deduped incoming rows commit directly via dynamic partition
     overwrite (one partitioned write instead of two). The emptiness probe
     is one partition-pruned semi-join over the touched dates.
+
+    Both paths write the table's full schema: columns a narrower
+    ``incoming`` frame lacks (8-column probe results into the 17-column
+    fact) are NULL-filled, never dropped from the committed files. A
+    target that is not laid out as ``{partition_col}=`` directories is
+    refused with ValueError before anything is written.
     """
     spark = incoming.sparkSession
-    staging = spark_existing_path.rstrip("/") + ".__staging__"
+    _require_partitioned_layout(spark, spark_existing_path, partition_col)
     existing = spark.read.parquet(spark_existing_path)
     touched = incoming.select(partition_col).distinct()
     relevant = existing.join(F.broadcast(touched), partition_col, "left_semi")
     if relevant.isEmpty():
         # no overlap: the merge reduces to an intra-incoming dedup (latest
-        # version per key), whose lineage never references the target path
-        merged = upsert(incoming.limit(0), incoming, key, version_col)
-        prev_mode = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            merged.write.mode("overwrite").partitionBy(
-                partition_col
-            ).parquet(spark_existing_path)
-        finally:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev_mode
-            )
+        # version per key) NULL-filled to the table's schema — an empty
+        # local frame, so the lineage never references the target path
+        empty = spark.createDataFrame([], existing.schema)
+        merged = upsert(empty, incoming, key, version_col)
+        _overwrite_partitions(merged, spark_existing_path, partition_col)
         return
+    staging = spark_existing_path.rstrip("/") + ".__staging__"
     merged = upsert(relevant, incoming, key, version_col)
     merged.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
-
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        spark.read.parquet(staging).write.mode("overwrite").partitionBy(
-            partition_col
-        ).parquet(spark_existing_path)
+        _overwrite_partitions(
+            spark.read.parquet(staging), spark_existing_path, partition_col
+        )
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
         _rm_tree(spark, staging)
+
+
+def _require_partitioned_layout(spark, path: str, partition_col: str) -> None:
+    """Refuse (before any write) a table root holding data outside
+    ``{partition_col}=`` directories — e.g. the range-split files
+    ``materialize_fact``/``import_duckdb`` write by default: a dynamic
+    partition overwrite would leave those files in place, and every
+    upserted key would then exist twice."""
+    jvm = spark.sparkContext._jvm
+    root = jvm.org.apache.hadoop.fs.Path(path)
+    fs = root.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    stray = [
+        name
+        for name in (st.getPath().getName() for st in fs.listStatus(root))
+        if not name.startswith(("_", ".", f"{partition_col}="))
+    ]
+    if stray:
+        raise ValueError(
+            f"{path} is not partitioned by {partition_col!r} "
+            f"(found {stray[:3]}); rewrite it with write_partitioned first"
+        )
+
+
+def _overwrite_partitions(
+    df: DataFrame, path: str, partition_col: str, dynamic: bool = True
+) -> None:
+    """Partitioned overwrite of ``path`` under ``partitionOverwriteMode``
+    dynamic (replace only the partitions ``df`` holds) or static (replace
+    the table); the session's previous mode is restored afterwards."""
+    spark = df.sparkSession
+    conf_key = "spark.sql.sources.partitionOverwriteMode"
+    prev_mode = spark.conf.get(conf_key, "static")
+    spark.conf.set(conf_key, "dynamic" if dynamic else "static")
+    try:
+        df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
+    finally:
+        spark.conf.set(conf_key, prev_mode)
 
 
 def merge(
@@ -263,20 +292,11 @@ def merge_into(
 
     staging = target_path.rstrip("/") + ".__staging__"
     merged.write.mode("overwrite").partitionBy(partition_col).parquet(staging)
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set(
-        "spark.sql.sources.partitionOverwriteMode",
-        "dynamic" if pruned else "static",
-    )
     try:
         # explicit schema: a merge that deletes every scoped row stages an
         # EMPTY dataset (no part files), which schema inference rejects
         staged = spark.read.schema(merged.schema).parquet(staging)
-        staged.write.mode("overwrite").partitionBy(partition_col).parquet(
-            target_path
-        )
+        _overwrite_partitions(staged, target_path, partition_col, pruned)
         if pruned:
             # dynamic overwrite only replaces partitions PRESENT in the
             # write: a touched partition whose rows were all deleted would
@@ -292,7 +312,6 @@ def merge_into(
                     spark, f"{target_path.rstrip('/')}/{partition_col}={v}"
                 )
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
         _rm_tree(spark, staging)
 
 
@@ -409,16 +428,9 @@ def compact_partitions(
         .partitionBy(partition_col)
         .parquet(staging)
     )
-    prev_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        spark.read.parquet(staging).write.mode("overwrite").partitionBy(
-            partition_col
-        ).parquet(path)
+        _overwrite_partitions(spark.read.parquet(staging), path, partition_col)
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
         _rm_tree(spark, staging)
     return fragged
 

@@ -25,6 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import open_table
 from ..functions import normalized_text
 from ..schema import DAILY_AVAILABILITY_KEY, DAILY_AVAILABILITY_VERSION, PROBE_RESULT
 from ..sources import writer
@@ -216,7 +217,7 @@ def start_upsert_sink(
                 table_path
             )
         if counts_path is not None:
-            table = spark.read.parquet(table_path)
+            table = open_table(spark, table_path)
             touched = [
                 r["date"] for r in batch_df.select("date").distinct().collect()
             ]

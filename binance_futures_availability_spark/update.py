@@ -30,6 +30,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .catalog import open_table
 from .ingest.probe import BatchProber, results_to_df
 from .operators import rankings as rankings_ops
 from .schema import (
@@ -178,7 +179,7 @@ def run_daily_update(
         )
     else:
         writer.write_partitioned(incoming, fact_path)
-    da = spark.read.parquet(fact_path)
+    da = open_table(spark, fact_path)
 
     summary: dict = {
         "window": (start.isoformat(), end.isoformat()),

@@ -67,19 +67,41 @@ def test_scalar_caches_flat_across_rewrites(spark, tmp_path):
     assert sizes == {1}
 
 
+def _persisted_rdds(spark) -> int:
+    """Persisted RDDs in the session; ``unpersist`` drops an RDD from this
+    map synchronously (its blocks are freed asynchronously)."""
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
 def test_read_fact_evicts_on_rewrite(spark, tmp_path, populated_da):
+    """Every rewrite of an imported fact table leaves ONE live registry
+    fingerprint for its path, serves the new rows, and unpersists the
+    superseded cached handle."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from binance_futures_availability_spark import catalog
     from binance_futures_availability_spark.sources import duckdb_io
 
     path = str(tmp_path / "fact.parquet")
-    for _ in range(5):
-        populated_da.write.mode("overwrite").parquet(path)
+    real = os.path.realpath(path)
+    base = _persisted_rdds(spark)
+    prev = None
+    for v in range(5):
+        populated_da.withColumn("trade_count", F.lit(v).cast("long")).write.mode(
+            "overwrite"
+        ).parquet(path)
         df = duckdb_io.read_fact(spark, path)
         assert df.count() == populated_da.count()
-        import os
-
-        real = os.path.realpath(path)
-        live = [k for k in duckdb_io._IMPORT_HANDLES if k[1] == real]
-        assert len(live) == 1
+        assert {r[0] for r in df.select("trade_count").collect()} == {v}
+        live = [k for k in catalog._HANDLES if k[1] == real]
+        assert len({k[2] for k in live}) == 1
+        assert [k[3] for k in live if k[3] is not None] == ["fact_cast"]
+        assert _persisted_rdds(spark) == base + 1
+        if prev is not None:
+            assert not prev.is_cached
+        prev = df
 
 
 def test_byte_budget_evicts_lru_and_hits_refresh_recency(
@@ -189,18 +211,25 @@ def test_foreign_floor_decays_on_miss_inserts(spark, tmp_path):
     index_cache.clear_indexes()
 
 
-def test_hot_key_survives_hash_in_file_names(spark, monkeypatch):
-    """hot: pseudo-URIs embed md5(fingerprint), not the raw fingerprint:
-    a data file whose NAME contains '#' used to corrupt the
-    rpartition('#') split in sweep_dead_entries, so the artifact was
-    evicted and rebuilt on every miss insert (r12 advice)."""
+def test_hot_key_survives_hash_in_file_names(spark, tmp_path):
+    """hot: pseudo-URIs end in the registry's hex-digest fingerprint, so a
+    table whose directory and file NAMES contain '#' keeps a stable key:
+    the rpartition('#') split in sweep_dead_entries still recovers the
+    path, the artifact survives while the table is unchanged, and a
+    rewrite evicts it (r12 advice)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from binance_futures_availability_spark import catalog, index_cache
 
     index_cache.clear_indexes()
-    fp = (("weird#name#part-0001.parquet", 1234, 999), 2)
-    monkeypatch.setattr(catalog, "_dir_fingerprint", lambda path: fp)
-    df = spark.createDataFrame([(1,)], ["id"])
-    df._spark_graft_source = ("/tmp/hot#dir", fp)
+    sf_dir = tmp_path / "hot#dir"
+    table = sf_dir / "region.parquet"
+    table.mkdir(parents=True)
+    pq.write_table(
+        pa.table({"id": [1, 2]}), str(table / "weird#name#part-0001.parquet")
+    )
+    df = catalog.load_table_hot(spark, str(sf_dir), "region", slices=2)
     key = index_cache.plan_key(df, "hash_name_artifact")
     assert key is not None
     uri = key[0][0]
@@ -210,13 +239,108 @@ def test_hot_key_survives_hash_in_file_names(spark, monkeypatch):
     # fingerprint unchanged -> the sweep must NOT treat the entry as dead
     assert index_cache.sweep_dead_entries(index_cache._HANDLES) == 0
     assert key in index_cache._HANDLES
-    # fingerprint changed -> dead, evicted
-    monkeypatch.setattr(
-        catalog, "_dir_fingerprint", lambda path: (("other.parquet", 1, 2), 1)
-    )
+    # table rewritten (a second '#'-named file) -> dead, evicted
+    pq.write_table(pa.table({"id": [3]}), str(table / "other#part.parquet"))
     assert index_cache.sweep_dead_entries(index_cache._HANDLES) == 1
     assert key not in index_cache._HANDLES
     index_cache.clear_indexes()
+
+
+def test_is_file_backed_agrees_with_plan_key(spark, tmp_path, monkeypatch):
+    """is_file_backed is True exactly when plan_key yields a key: when plan
+    canonicalization fails, both report "not cacheable"."""
+    from binance_futures_availability_spark import index_cache
+
+    path = str(tmp_path / "t.parquet")
+    spark.range(3).write.parquet(path)
+    df = spark.read.parquet(path)
+    assert index_cache.is_file_backed(df)
+    assert index_cache.plan_key(df, "probe") is not None
+
+    def broken(_df):
+        raise RuntimeError("plan canonicalization failed")
+
+    monkeypatch.setattr(index_cache, "_plan_digest", broken)
+    assert index_cache.plan_key(df, "probe") is None
+    assert not index_cache.is_file_backed(df)
+
+
+def _write_fact(spark, path, rows):
+    from conftest import _row
+
+    from binance_futures_availability_spark.schema import DAILY_AVAILABILITY
+    from binance_futures_availability_spark.sources import writer
+
+    writer.write_partitioned(
+        spark.createDataFrame([_row(*r) for r in rows], DAILY_AVAILABILITY),
+        path,
+    )
+
+
+def test_engine_table_discovers_partitions_once(spark, tmp_path):
+    """Two Engine(table_path=p).table() calls on an unchanged partitioned
+    table run partition discovery (file listing + schema jobs) once."""
+    import datetime as dt
+    import uuid
+
+    from binance_futures_availability_spark.api import Engine
+
+    path = str(tmp_path / "fact")
+    d0 = dt.date(2024, 1, 1)
+    _write_fact(
+        spark,
+        path,
+        [(d0 + dt.timedelta(days=i), "BTCUSDT", True, 1.0) for i in range(40)],
+    )
+    sc = spark.sparkContext
+
+    def jobs_to_open() -> int:
+        group = f"open-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            Engine(table_path=path, spark=spark).table()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs_to_open() >= 1
+    assert jobs_to_open() == 0
+
+
+def test_engine_table_sees_upserted_rows(spark, tmp_path):
+    """After upsert_partitioned into p, the next table() on p returns the
+    new and replaced rows, not the memoized pre-upsert snapshot."""
+    import datetime as dt
+
+    from conftest import _row
+
+    from binance_futures_availability_spark.api import Engine
+    from binance_futures_availability_spark.schema import (
+        DAILY_AVAILABILITY,
+        DAILY_AVAILABILITY_KEY,
+        DAILY_AVAILABILITY_VERSION,
+    )
+    from binance_futures_availability_spark.sources import writer
+
+    d1, d2, d3 = (dt.date(2024, 1, d) for d in (1, 2, 3))
+    path = str(tmp_path / "fact")
+    _write_fact(
+        spark, path, [(d1, "BTCUSDT", True, 1.0), (d2, "BTCUSDT", True, 2.0)]
+    )
+    engine = Engine(table_path=path, spark=spark)
+    assert engine.table().count() == 2
+    incoming = spark.createDataFrame(
+        [_row(d2, "BTCUSDT", True, 20.0), _row(d3, "BTCUSDT", True, 3.0)],
+        DAILY_AVAILABILITY,
+    )
+    writer.upsert_partitioned(
+        path, incoming, DAILY_AVAILABILITY_KEY, DAILY_AVAILABILITY_VERSION
+    )
+    got = {
+        r["date"]: r["quote_volume_usdt"]
+        for r in engine.table().select("date", "quote_volume_usdt").collect()
+    }
+    assert got == {d1: 1.0, d2: 20.0, d3: 3.0}
 
 
 def test_multi_plan_key_sweeps_on_either_source_rewrite(spark, tmp_path):

@@ -586,10 +586,11 @@ def test_availability_pivot_weekday_matrix(populated_da):
 
 
 def test_load_table_hot_evicts_superseded_fingerprints(spark, tmp_path):
-    """Rewriting a table changes its fingerprint; the hot-cache must
+    """Rewriting a table changes its fingerprint; the catalog registry must
     evict-and-unpersist the stale pinned snapshot instead of stranding
     its blocks in executor storage for the session (ADVICE r8). 100
     rewrite cycles must not grow the cache monotonically."""
+    import os
     import time
 
     from binance_futures_availability_spark import catalog
@@ -605,16 +606,22 @@ def test_load_table_hot_evicts_superseded_fingerprints(spark, tmp_path):
         # the fingerprint by touching the dir contents deterministically
         time.sleep(0.01)
 
-    before = {k for k in catalog._HOT_CACHE if k[1] == path}
-    assert not before
+    real = os.path.realpath(path)
+    assert not [k for k in catalog._HANDLES if k[1] == real]
     sizes = set()
+    prev = None
     for v in range(8):
         write(v)
         df = catalog.load_table_hot(spark, sf_dir, "region", slices=2)
         assert df.count() == 1
-        live = [k for k in catalog._HOT_CACHE if k[1] == path]
-        sizes.add(len(live))
-    assert sizes == {1}  # never more than one live entry per path
+        live = [k for k in catalog._HANDLES if k[1] == real]
+        sizes.add((len({k[2] for k in live}), len(live)))
+        if prev is not None:
+            assert not prev.is_cached  # superseded snapshot unpersisted
+        prev = df
+    # never more than one live fingerprint per path: its plain handle
+    # plus the hot variant
+    assert sizes == {(1, 2)}
     # and the survivor is the latest fingerprint's DataFrame
     assert (
         catalog.load_table_hot(spark, sf_dir, "region", slices=2)

@@ -438,3 +438,70 @@ def test_expire_partitions_metadata_only(spark, tmp_path):
     assert {str(r["date"]) for r in left.select("date").distinct().collect()} == {"2024-01-03"}
     # idempotent: nothing else matches
     assert expire_partitions(spark, path, before="2024-01-03") == []
+
+
+def _data_files(path):
+    import os
+
+    return {
+        os.path.join(d, n): (os.stat(os.path.join(d, n)).st_size,
+                             os.stat(os.path.join(d, n)).st_mtime_ns)
+        for d, _, names in os.walk(path)
+        for n in names
+    }
+
+
+def test_upsert_partitioned_insert_only_keeps_full_schema(spark, tmp_path):
+    """A no-overlap upsert of an 8-column probe frame into the 17-column
+    fact table NULL-fills the missing columns: every committed data file
+    and the table read still carry all 17 fact columns."""
+    import pyarrow.parquet as pq
+
+    from binance_futures_availability_spark.schema import PROBE_RESULT
+
+    path = str(tmp_path / "fact")
+    writer.write_partitioned(
+        make_da(spark, [(D(2024, 1, 1), "BTCUSDT", True, 100.0)]), path
+    )
+    probe = spark.createDataFrame(
+        [(D(2024, 1, 5), "BTCUSDT", True, 7, None, "u", 200,
+          dt.datetime(2024, 1, 6))],
+        PROBE_RESULT,
+    )
+    writer.upsert_partitioned(path, probe, ["date", "symbol"], "probe_timestamp")
+
+    expected = set(DAILY_AVAILABILITY.fieldNames())
+    files = [p for p in _data_files(path) if p.endswith(".parquet")]
+    assert any("date=2024-01-05" in p for p in files)
+    for p in files:
+        assert expected - {"date"} <= set(pq.read_schema(p).names), p
+    got = spark.read.parquet(path)
+    assert set(got.columns) == expected
+    new = got.filter("date = DATE'2024-01-05'").first()
+    assert new["file_size_bytes"] == 7 and new["quote_volume_usdt"] is None
+
+
+def test_upsert_partitioned_refuses_range_split_layout(spark, tmp_path):
+    """A table root holding data files outside date= directories (the
+    range-split layout import_duckdb writes by default) is refused with
+    ValueError before any write: the table is left byte-identical."""
+    import os
+
+    import pytest
+
+    from binance_futures_availability_spark.operators.availability import (
+        materialize_fact,
+    )
+
+    path = str(tmp_path / "fact")
+    materialize_fact(
+        make_da(spark, [(D(2024, 1, 1), "BTCUSDT", True, 100.0)]), path
+    )
+    before = _data_files(path)
+    incoming = make_da(spark, [(D(2024, 1, 2), "BTCUSDT", True, 1.0)])
+    with pytest.raises(ValueError, match="not partitioned by 'date'"):
+        writer.upsert_partitioned(
+            path, incoming, ["date", "symbol"], "probe_timestamp"
+        )
+    assert _data_files(path) == before
+    assert not os.path.exists(path + ".__staging__")
