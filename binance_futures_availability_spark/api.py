@@ -52,7 +52,9 @@ class Engine:
 
     ``table_path`` points at a parquet daily_availability table, opened
     through the catalog's handle registry (one partition discovery per
-    table version per session); for the synthetic testdata layout pass
+    table version per session: a listing job of at most
+    ``spark.sql.shuffle.partitions`` tasks plus a schema job, whatever the
+    number of date directories); for the synthetic testdata layout pass
     ``sf_dir`` instead and the table is the materialized derivation
     (operators/availability.availability_fact).
     """

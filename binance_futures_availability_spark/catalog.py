@@ -12,8 +12,10 @@ its ONE handle registry:
   variant names an optional derivation of the plain read (a cast
   projection, a re-sliced ``.cache()``…); ``None`` is the plain handle.
   A fresh ``spark.read.parquet(path)`` re-runs the file listing and
-  schema resolution as Spark jobs (2.5k tasks for a 2.5k-date table),
-  so resolving a path once per session is what any engine's catalog does.
+  schema resolution as Spark jobs (one listing job of at most
+  ``spark.sql.shuffle.partitions`` tasks — see ``session.py`` — plus one
+  schema job), so resolving a path once per session is what any
+  engine's catalog does.
 - staleness: every committed Spark write rewrites ``_SUCCESS`` and
   replaces the files or partition directories it touches, so the
   fingerprint of the entries directly under the path misses.

@@ -9,6 +9,14 @@ Design notes (scale-first):
 - shuffle.partitions defaults to the local core count for tests; on a real
   cluster this is overridden by AQE's coalescing from a high initial value.
 - Arrow enabled for any toPandas()/pandas_udf boundary (vectorized transfer).
+- Partition discovery is capped at the same width as shuffles. Spark lists
+  a table's directories in one job of min(#dirs, parallelism) tasks, and the
+  default parallelism of 10,000 means one task per date directory. In local
+  mode those tasks run in the driver JVM, so one task per directory is pure
+  scheduling overhead; on a cluster the cap keeps listing distributed over
+  executors (object stores list slowly) while bounding the task count. The
+  threshold that switches to serial driver-side listing is left alone for
+  that reason.
 """
 
 from __future__ import annotations
@@ -57,6 +65,10 @@ def get_session(
         .master(master)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.parallelism",
+            str(shuffle_partitions),
+        )
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
